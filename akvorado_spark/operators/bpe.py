@@ -21,17 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
+from akvorado_spark.functions.sqltext import ident, str_lit
 
 END = "</w>"  # end-of-word marker, merged like any other symbol
-
-# finished Column trees keyed by (kind, operand text[, merge pair]):
-# each higher-order-function construction costs ~50-350 ms of py4j
-# round trips (r13 measurement: 16 _merge_expr builds = 5.8 s of the
-# vocab_suite build), while the finished expression is immutable and
-# the deterministic trainer re-derives the same merges every
-# invocation, so the keys recur
-_EXPR_MEMO = LruMemo(maxsize=256)
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -45,60 +37,43 @@ def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _char_symbols(word):
-    """word → [c1, c2, ..., END] as array<string> (codegen, no UDF).
+def _char_symbols(word: str) -> str:
+    """SQL text: column ``word`` → [c1, c2, ..., END] as array<string>
+    (codegen, no UDF).
 
     The empty-word branch is explicit: Spark's ``sequence(1, 0)``
     DESCENDS to [1, 0] instead of returning [], which would fabricate
     two empty symbols for a zero-length word."""
-    def build():
-        chars = F.when(
-            F.length(word) > 0,
-            F.transform(
-                F.sequence(F.lit(1), F.length(word)),
-                lambda i: word.substr(i, F.lit(1)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return F.concat(chars, F.array(F.lit(END)))
-
-    return _EXPR_MEMO.get_or_build(("chars", str(word)), build)
+    w = ident(word)
+    return (
+        f"concat(CASE WHEN length({w}) > 0"
+        f" THEN transform(sequence(1, length({w})), i -> substr({w}, i, 1))"
+        f" ELSE CAST(array() AS ARRAY<STRING>) END, array({str_lit(END)}))"
+    )
 
 
-def _merge_expr(syms, a: str, b: str):
-    """Greedy left-to-right merge of adjacent (a, b) into a+b — an
-    aggregate fold; ``get`` (not element_at) keeps the empty-accumulator
-    probe null-safe under ANSI."""
-    def build():
-        merged = F.lit(a + b)
-        return F.aggregate(
-            syms,
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.get(acc, F.size(acc) - 1) == a) & (s == F.lit(b)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-                ),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-
-    return _EXPR_MEMO.get_or_build(("merge", str(syms), a, b), build)
+def _merge_sql(syms: str, a: str, b: str) -> str:
+    """SQL text: greedy left-to-right merge of adjacent (a, b) into a+b
+    over the symbol array ``syms`` (SQL text) — an aggregate fold;
+    ``get`` (not element_at) keeps the empty-accumulator probe
+    null-safe under ANSI."""
+    return (
+        f"aggregate({syms}, CAST(array() AS ARRAY<STRING>), (acc, s) ->"
+        f" CASE WHEN get(acc, size(acc) - 1) = {str_lit(a)} AND s = {str_lit(b)}"
+        f" THEN concat(slice(acc, 1, size(acc) - 1), array({str_lit(a + b)}))"
+        " ELSE concat(acc, array(s)) END)"
+    )
 
 
 def _pair_counts(vocab: DataFrame) -> DataFrame:
-    def build():
-        m = F.greatest(F.size(F.col("syms")) - 1, F.lit(1))
-        return F.when(
-            F.size(F.col("syms")) >= 2,
-            F.zip_with(
-                F.slice(F.col("syms"), 1, m),
-                F.slice(F.col("syms"), 2, m),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-
-    pairs = _EXPR_MEMO.get_or_build(("pairs", "syms"), build)
+    m = "greatest(size(syms) - 1, 1)"
+    pairs = (
+        f"CASE WHEN size(syms) >= 2 THEN zip_with(slice(syms, 1, {m}), slice(syms, 2, {m}),"
+        " (x, y) -> struct(x AS a, y AS b))"
+        " ELSE CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) END"
+    )
     return (
-        vocab.select(F.col("n"), F.explode(pairs).alias("p"))
+        vocab.selectExpr("n", f"explode({pairs}) AS p")
         .groupBy("p.a", "p.b")
         .agg(F.sum("n").alias("cnt"))
     )
@@ -119,9 +94,7 @@ def train_bpe(
     Stops early when no adjacent pair remains.
     """
     wc = counts if counts is not None else word_counts(df, text_col)
-    vocab = wc.select(
-        "n", _char_symbols(F.col("word")).alias("syms")
-    ).localCheckpoint()
+    vocab = wc.selectExpr("n", f"{_char_symbols('word')} AS syms").localCheckpoint()
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (
@@ -134,9 +107,7 @@ def train_bpe(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        vocab = vocab.select(
-            "n", _merge_expr(F.col("syms"), a, b).alias("syms")
-        ).localCheckpoint()
+        vocab = vocab.selectExpr("n", f"{_merge_sql('syms', a, b)} AS syms").localCheckpoint()
     return merges
 
 
@@ -151,11 +122,15 @@ def segment_words(
     ``out_col`` array<string> of BPE tokens.  Merges nest as folds;
     local checkpoints every ``chunk`` merges keep the expression tree
     bounded.  Run on DISTINCT words and broadcast-join the result back
-    to the corpus — application cost is vocabulary-sized."""
-    out = words_df.withColumn(out_col, _char_symbols(F.col(word_col)))
-    for i, (a, b) in enumerate(merges):
-        out = out.withColumn(out_col, _merge_expr(F.col(out_col), a, b))
-        if (i + 1) % chunk == 0:
+    to the corpus — application cost is vocabulary-sized.  Each chunk
+    of merges is one nested SQL expression (one projection)."""
+    out = words_df.withColumn(out_col, F.expr(_char_symbols(word_col)))
+    for start in range(0, len(merges), chunk):
+        syms = ident(out_col)
+        for a, b in merges[start : start + chunk]:
+            syms = _merge_sql(syms, a, b)
+        out = out.withColumn(out_col, F.expr(syms))
+        if start + chunk <= len(merges):
             out = out.localCheckpoint()
     return out
 

@@ -23,13 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-
-# finished Column trees for the wide per-bit expression sets (simhash
-# votes/fingerprint): building 64 shift/when/sum nodes costs ~2-3 s of
-# py4j round trips per invocation (r13 measurement) while the result
-# is an immutable expression tree keyed only by (bits, column names)
-_EXPR_MEMO = LruMemo(maxsize=64)
+from akvorado_spark.functions.sqltext import ident
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -127,6 +121,13 @@ def affine_mix(h, seed: int):
     return (hi * F.lit(a1) + lo * F.lit(a2) + F.lit(b)) % F.lit(MIX_MOD)
 
 
+def affine_mix_sql(h: str, seed: int) -> str:
+    """:func:`affine_mix` as SQL text over the column named ``h``."""
+    a1, a2, b = mix_constants(seed)
+    h = ident(h)
+    return f"(shiftright({h}, 28) * {a1} + ({h} & {_MIX_MASK28}) * {a2} + {b}L) % {MIX_MOD}L"
+
+
 def portable_base_hash(col):
     """56-bit md5 prefix of the value — one evaluation per shingle."""
     return F.conv(
@@ -139,11 +140,12 @@ def xxhash64_base_hash(col):
     return F.xxhash64(col).bitwiseAND(F.lit(MIX_MOD - 1))
 
 
-# hash_fn → (base, mix) upgrade map: pipelines passing one of the two
-# canonical seeded functions automatically get the one-base-hash plan
+# hash_fn → base-hash upgrade map: pipelines passing one of the two
+# canonical seeded functions automatically get the one-base-hash plan,
+# with the seeds derived by affine_mix
 HASH_FAMILIES = {
-    seeded_xxhash64: (xxhash64_base_hash, affine_mix),
-    portable_seeded_hash: (portable_base_hash, affine_mix),
+    seeded_xxhash64: xxhash64_base_hash,
+    portable_seeded_hash: portable_base_hash,
 }
 
 
@@ -165,12 +167,11 @@ def minhash_signature_expr(grams, n_hashes: int = 32, hash_fn=seeded_xxhash64):
     def _one_arg(fn, seed):
         return lambda x: fn(x, seed)
 
-    family = HASH_FAMILIES.get(hash_fn)
-    if family is not None:
-        base_fn, mix = family
+    base_fn = HASH_FAMILIES.get(hash_fn)
+    if base_fn is not None:
         bases = F.transform(grams, base_fn)
         mins = [
-            F.array_min(F.transform(bases, _one_arg(mix, i)))
+            F.array_min(F.transform(bases, _one_arg(affine_mix, i)))
             for i in range(n_hashes)
         ]
     else:
@@ -238,33 +239,22 @@ def minhash_signatures(
     """
     if grams is None:
         grams = corpus_grams(df, text_col, id_col, ngram)
-    family = HASH_FAMILIES.get(hash_fn)
-    if family is not None:
-        base_fn, mix = family
+    base_fn = HASH_FAMILIES.get(hash_fn)
+    if base_fn is not None:
         # Project the base hash BEFORE the aggregate so it is computed
-        # once per shingle row regardless of codegen CSE behavior.
+        # once per shingle row regardless of codegen CSE behavior; the
+        # n minima are then one SQL aggregate over it.
         grams = grams.withColumn("__b", base_fn(F.col("__g")))
-        # canonical families are module-level functions → a stable memo
-        # key; the n_hashes Column list is rebuilt every invocation
-        # otherwise (py4j round trips, r13)
-        mins = _EXPR_MEMO.get_or_build(
-            ("minhash_mins", hash_fn.__module__, hash_fn.__qualname__, n_hashes),
-            lambda: [
-                F.min(mix(F.col("__b"), i)).alias(f"__m{i}")
-                for i in range(n_hashes)
-            ],
-        )
+        mins = ", ".join(f"min({affine_mix_sql('__b', i)})" for i in range(n_hashes))
+        signature = F.expr(f"array({mins})")
     else:
-        mins = [
-            F.min(hash_fn(F.col("__g"), i)).alias(f"__m{i}")
-            for i in range(n_hashes)
-        ]
-    sig = grams.groupBy(id_col).agg(*mins)
-    signature = _EXPR_MEMO.get_or_build(
-        ("minhash_sig_array", n_hashes),
-        lambda: F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]),
-    )
-    return sig.select(id_col, signature.alias("signature"))
+        # a caller-supplied hash function: project its n seeded hashes
+        # once, then take their minima by name
+        hashed = [hash_fn(F.col("__g"), i).alias(f"__h{i}") for i in range(n_hashes)]
+        grams = grams.select(id_col, *hashed)
+        mins = ", ".join(f"min(__h{i})" for i in range(n_hashes))
+        signature = F.expr(f"array({mins})")
+    return grams.groupBy(id_col).agg(signature.alias("signature"))
 
 
 def lsh_candidate_pairs(
@@ -473,29 +463,12 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64, hash_fn=N
             F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
         ).alias("__w"),
     ).withColumn("__h", wh(F.col("__w")))
-    vote_cols = _EXPR_MEMO.get_or_build(
-        ("simhash_votes", bits),
-        lambda: [
-            F.sum(
-                F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"__v{i}")
-            for i in range(bits)
-        ],
+    # one aggregate: per bit, a ±1 vote sum decides whether the bit is set
+    fp = " | ".join(
+        f"IF(sum(IF((shiftright(__h, {i}) & 1) = 1, 1, -1)) > 0, shiftleft(1L, {i}), 0L)"
+        for i in range(bits)
     )
-    votes = words.groupBy(id_col).agg(*vote_cols)
-
-    def build_fp():
-        fp = None
-        for i in range(bits):
-            bit = F.when(F.col(f"__v{i}") > 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            term = F.shiftleft(bit, i)
-            fp = term if fp is None else fp.bitwiseOR(term)
-        return fp
-
-    fp = _EXPR_MEMO.get_or_build(("simhash_fp", bits), build_fp)
-    return votes.select(F.col(id_col), fp.alias("simhash"))
+    return words.groupBy(id_col).agg(F.expr(fp).alias("simhash"))
 
 
 def simhash_candidate_pairs(
@@ -718,83 +691,53 @@ def decontaminate(
 # oracle.
 
 
-def _ascii_code_array(text_col: str):
-    """Per-row array of ascii codepoints, one per char.  Materialized
-    before the hash array so each 4-gram hash is four element_at
-    lookups instead of four substr(·,·,1) string slices — measured 2×
-    on the end-to-end occurrence scan.  Memoized on the column name
-    (r14): the tree is a pure function of it, and each lambda-API
-    construction costs ~45 ms of py4j round trips per build."""
-    return _EXPR_MEMO.get_or_build(
-        ("ascii_codes", text_col),
-        lambda: F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(F.col(text_col)), F.lit(1))),
-            lambda p: F.ascii(F.col(text_col).substr(p, F.lit(1))),
-        ),
-    )
+def _ascii_code_array(text: str) -> str:
+    """Per-row array of ascii codepoints, one per char (SQL text over
+    the column ``text``).  Materialized before the hash array so each
+    4-gram hash is four element_at lookups instead of four
+    substr(·,·,1) string slices — measured 2× on the end-to-end
+    occurrence scan."""
+    return f"transform(sequence(1, greatest(length({text}), 1)), p -> ascii(substr({text}, p, 1)))"
 
 
-def _winnow_hash_array(text_col: str, window: int, cs):
+def _winnow_hash_array(text: str, window: int, cs: str) -> str:
     """Per-row array of 4-gram hashes over the materialized codepoint
     array ``cs``, one per candidate start 0..len-window (empty when the
     doc is shorter than ``window``).  Materialized as its OWN column
     before the selection filter: if the array expression were inlined,
     every element_at in the winnowing predicate would recompute the
     whole array — O(n²·stride) per doc."""
-
-    def h4(i):
-        # 4-gram hash of chars at 0-based i..i+3 (element_at 1-based)
-        return sum(
-            F.element_at(cs, i + F.lit(off)) * F.lit(mul)
-            for off, mul in ((1, 3), (2, 5), (3, 7), (4, 11))
-        )
-
-    def build():
-        n = F.length(F.col(text_col)) - window + 1
-        return F.when(
-            F.length(F.col(text_col)) >= window,
-            F.transform(F.sequence(F.lit(0), n - 1), h4),
-        ).otherwise(F.array().cast("array<int>"))
-
-    return _EXPR_MEMO.get_or_build(
-        ("winnow_hash", text_col, window, str(cs)), build
+    # 4-gram hash of chars at 0-based i..i+3 (element_at 1-based)
+    h4 = " + ".join(
+        f"element_at({cs}, i + {off}) * {mul}"
+        for off, mul in ((1, 3), (2, 5), (3, 7), (4, 11))
+    )
+    return (
+        f"CASE WHEN length({text}) >= {window}"
+        f" THEN transform(sequence(0, length({text}) - {window}), i -> {h4})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
 
 
-def _winnow_select(hs, stride: int):
+def _winnow_select(hs: str, stride: int) -> str:
     """Anchor starts from a MATERIALIZED hash-array column ``hs``:
     0-based position ``i`` is selected iff b + f ≥ stride-1, where b/f
     are the "offset of first failure" folds described above.  Cost is
     O(n·stride) element_at lookups per doc."""
+    # element_at index clamped into [1, n]; the in-bounds guard decides
+    # pass/fail, the clamp only keeps it evaluable
+    def look(j):
+        return f"element_at({hs}, greatest(1, least(size({hs}), {j} + 1)))"
 
-    def pred(i):
-        hi = F.element_at(hs, i + 1)
-        offs = F.sequence(F.lit(1), F.lit(stride - 1))
-        # element_at index clamped into [1, n]; the in-bounds guard
-        # decides pass/fail, the clamp only keeps it evaluable
-        def look(j):
-            return F.element_at(
-                hs, F.greatest(F.lit(1), F.least(F.size(hs), j + 1))
-            )
-
-        bf = F.array_min(
-            F.filter(offs, lambda o: (i - o >= 0) & (look(i - o) < hi))
-        )
-        ff = F.array_min(
-            F.filter(
-                offs, lambda o: (i + o <= F.size(hs) - 1) & (look(i + o) <= hi)
-            )
-        )
-        b = F.coalesce(bf - 1, F.lit(stride - 1))
-        f = F.coalesce(ff - 1, F.lit(stride - 1))
-        return (b + f) >= stride - 1
-
-    return _EXPR_MEMO.get_or_build(
-        ("winnow_select", str(hs), stride),
-        lambda: F.when(
-            F.size(hs) > 0,
-            F.filter(F.sequence(F.lit(0), F.size(hs) - 1), pred),
-        ).otherwise(F.array().cast("array<int>")),
+    hi = f"element_at({hs}, i + 1)"
+    offs = f"sequence(1, {stride - 1})"
+    bf = f"array_min(filter({offs}, o -> i - o >= 0 AND {look('i - o')} < {hi}))"
+    ff = f"array_min(filter({offs}, o -> i + o <= size({hs}) - 1 AND {look('i + o')} <= {hi}))"
+    pred = f"coalesce({bf} - 1, {stride - 1}) + coalesce({ff} - 1, {stride - 1}) >= {stride - 1}"
+    return (
+        f"CASE WHEN size({hs}) > 0"
+        f" THEN filter(sequence(0, size({hs}) - 1), i -> {pred})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
 
 
@@ -830,39 +773,24 @@ def substring_window_occurrences(
     """
     if window < 4:
         raise ValueError("window must be >= 4 (the anchor 4-gram must fit)")
+    text = ident(text_col)
     base = df
     if anchored:
         # codepoints, then hashes, each projected as its own column so
         # downstream element_at lookups hit bound references, never a
         # re-evaluated transform (O(n·stride), not O(n²·stride))
-        base = (
-            df.select(F.col(id_col), F.col(text_col))
-            .withColumn("__cs", _ascii_code_array(text_col))
-            .withColumn("__hs", _winnow_hash_array(text_col, window, F.col("__cs")))
-        )
-        starts = _winnow_select(F.col("__hs"), stride)
+        base = df.selectExpr(
+            ident(id_col), text, f"{_ascii_code_array(text)} AS __cs"
+        ).withColumn("__hs", F.expr(_winnow_hash_array(text, window, "__cs")))
+        starts = _winnow_select("__hs", stride)
     else:
-        starts = F.when(
-            F.length(F.col(text_col)) >= window,
-            F.sequence(
-                F.lit(0),
-                F.length(F.col(text_col)) - window,
-                F.lit(stride),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-    wins = _EXPR_MEMO.get_or_build(
-        ("win_structs", text_col, window, stride, anchored, str(starts)),
-        lambda: F.transform(
-            starts,
-            lambda s: F.struct(
-                s.cast("long").alias("s"),
-                F.col(text_col).substr(s + 1, F.lit(window)).alias("w"),
-            ),
-        ),
-    )
-    return base.select(F.col(id_col), F.explode(wins).alias("x")).select(
-        id_col, F.col("x.s").alias("s"), F.col("x.w").alias("w")
-    )
+        starts = (
+            f"CASE WHEN length({text}) >= {window}"
+            f" THEN sequence(0, length({text}) - {window}, {stride})"
+            " ELSE CAST(array() AS ARRAY<INT>) END"
+        )
+    wins = f"transform({starts}, s -> struct(CAST(s AS BIGINT) AS s, substr({text}, s + 1, {window}) AS w))"
+    return base.selectExpr(ident(id_col), f"inline({wins})")
 
 
 def duplicate_window_spans(
@@ -931,62 +859,31 @@ def excise_spans(
     (id, n_dup_windows, n_spans, chars_removed, cleaned).
     """
     joined = spans.join(docs.select(id_col, text_col), id_col)
-
-    # the four expression trees are pure functions of (text_col,
-    # window) + fixed internal names — memoized as a unit (r14): five
-    # lambda-API constructions ≈ 0.25 s of py4j per build otherwise
-    def build():
-        ss = F.col("starts")
-        w = F.lit(window).cast("long")
-        # filter-lambda indices are 0-based, element_at is 1-based; the
-        # greatest/least clamps keep the (eagerly evaluated) lookups in
-        # bounds at both edges where the other disjunct already decides
-        lo = F.filter(
-            ss,
-            lambda x, i: (i == 0)
-            | ((x - F.element_at(ss, F.greatest(i, F.lit(1)))) > w),
-        )
-        hi = F.transform(
-            F.filter(
-                ss,
-                lambda x, i: (i == F.size(ss) - 1)
-                | ((F.element_at(ss, F.least(i + 2, F.size(ss))) - x) > w),
-            ),
-            lambda x: x + w,
-        )
-        kept_lo = F.concat(F.array(F.lit(0).cast("long")), F.col("__hi"))
-        kept_hi = F.concat(
-            F.col("__lo"), F.array(F.length(F.col(text_col)).cast("long"))
-        )
-        cleaned = F.concat_ws(
-            "",
-            F.zip_with(
-                kept_lo,
-                kept_hi,
-                lambda a, b: F.col(text_col).substr(
-                    a.cast("int") + 1,
-                    F.greatest(b - a, F.lit(0).cast("long")).cast("int"),
-                ),
-            ),
-        )
-        removed = F.aggregate(
-            F.zip_with(F.col("__lo"), F.col("__hi"), lambda a, b: b - a),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        return lo, hi, removed, cleaned
-
-    lo, hi, removed, cleaned = _EXPR_MEMO.get_or_build(
-        ("excise", text_col, window), build
+    text = ident(text_col)
+    w = f"CAST({window} AS BIGINT)"
+    # filter-lambda indices are 0-based, element_at is 1-based; the
+    # greatest/least clamps keep the (eagerly evaluated) lookups in
+    # bounds at both edges where the other disjunct already decides
+    lo = f"filter(starts, (x, i) -> i = 0 OR x - element_at(starts, greatest(i, 1)) > {w})"
+    hi = (
+        "transform(filter(starts, (x, i) -> i = size(starts) - 1"
+        f" OR element_at(starts, least(i + 2, size(starts))) - x > {w}), x -> x + {w})"
     )
+    kept_lo = "concat(array(0L), __hi)"
+    kept_hi = f"concat(__lo, array(CAST(length({text}) AS BIGINT)))"
+    cleaned = (
+        f"concat_ws('', zip_with({kept_lo}, {kept_hi}, (a, b) ->"
+        f" substr({text}, CAST(a AS INT) + 1, CAST(greatest(b - a, 0L) AS INT))))"
+    )
+    removed = "aggregate(zip_with(__lo, __hi, (a, b) -> b - a), 0L, (acc, x) -> acc + x)"
     return (
-        joined.withColumn("__lo", lo)
-        .withColumn("__hi", hi)
-        .withColumn("n_spans", F.size(F.col("__lo")))
-        .withColumn("chars_removed", removed)
-        .withColumn("cleaned", cleaned)
-        .select(
-            id_col, "n_dup_windows", "n_spans", "chars_removed", "cleaned"
+        joined.withColumns({"__lo": F.expr(lo), "__hi": F.expr(hi)})
+        .selectExpr(
+            ident(id_col),
+            "n_dup_windows",
+            "size(__lo) AS n_spans",
+            f"{removed} AS chars_removed",
+            f"{cleaned} AS cleaned",
         )
     )
 
@@ -1083,27 +980,11 @@ def line_dedup(
         if keep_owner:
             drop = drop & (F.col(id_col) != F.col("__own"))
         marked = joined.withColumn("__drop", drop)
-    # reassembly expression over fixed internal names — memoized (r14):
-    # two lambda-API calls ≈ 0.1 s of py4j per build otherwise
-    cleaned = _EXPR_MEMO.get_or_build(
-        ("line_clean",),
-        lambda: F.concat_ws(
-            "\n",
-            F.transform(
-                F.filter(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__i"), F.col("__drop"), F.col("__ln")
-                            )
-                        )
-                    ),
-                    lambda x: ~x["__drop"],
-                ),
-                lambda x: x["__ln"],
-            ),
-        ).alias("cleaned"),
-    )
+    # reassembly in line order, over fixed internal names
+    cleaned = F.expr(
+        "concat_ws('\\n', transform(filter(sort_array(collect_list("
+        "struct(__i, __drop, __ln))), x -> NOT x.__drop), x -> x.__ln))"
+    ).alias("cleaned")
     return (
         marked.groupBy(id_col)
         .agg(

@@ -26,14 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
+from akvorado_spark.functions.sqltext import ident
 from akvorado_spark.operators.text import words
-
-# finished bigram-expression trees keyed on (text_col, key_fn): the
-# key_fn is keyed by OBJECT identity (module-level functions like
-# portable_word_hash are stable), so a different callable can never
-# receive another's tree
-_GRAMS_MEMO = LruMemo(maxsize=64)
 
 
 def doc_bigrams(
@@ -58,27 +52,17 @@ def doc_bigrams(
     its element type from the paired array itself (filter-false), so
     the when/otherwise branches can never type-mismatch.
 
-    The grams expression is memoized on (text_col, key_fn identity) —
-    a pure function of both; its four lambda-API constructions cost
-    ~0.2 s of py4j per build otherwise (r14)."""
-
-    def build():
-        ws = words(F.col(text_col))
-        if key_fn is not None:
-            ws = F.transform(ws, key_fn)
-        m = F.greatest(F.size(ws) - 1, F.lit(1))
-        pairs = F.zip_with(
-            F.slice(ws, 1, m),
-            F.slice(ws, 2, m),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        )
-        return F.when(F.size(ws) >= 2, pairs).otherwise(
-            F.filter(pairs, lambda _: F.lit(False))
-        )
-
-    grams = _GRAMS_MEMO.get_or_build(("doc_bigrams", text_col, key_fn), build)
-    return df.select(F.col(id_col), F.explode(grams).alias("b")).select(
-        id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+    The keyed token array is projected once as ``__ws``; the pairing is
+    one SQL expression over it."""
+    ws = words(F.col(text_col))
+    if key_fn is not None:
+        ws = F.transform(ws, key_fn)
+    m = "greatest(size(__ws) - 1, 1)"
+    pairs = f"zip_with(slice(__ws, 1, {m}), slice(__ws, 2, {m}), (a, b) -> struct(a AS w1, b AS w2))"
+    grams = f"CASE WHEN size(__ws) >= 2 THEN {pairs} ELSE filter({pairs}, p -> false) END"
+    return (
+        df.select(F.col(id_col), ws.alias("__ws"))
+        .selectExpr(ident(id_col), f"inline({grams})")
     )
 
 

@@ -43,13 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
-
-# finished Column lists for the per-(byte-width, column-set) expansion
-# and resolution expressions: building them costs ~1.5 s of py4j round
-# trips per lpm_rib invocation (r13 profile) while every piece is a
-# pure function of (B, column names) — immutable and reusable
-_EXPR_MEMO = LruMemo(maxsize=128)
+from akvorado_spark.functions.sqltext import ident, select_replacing
 
 
 def _expand_to_bytes(
@@ -59,31 +53,18 @@ def _expand_to_bytes(
     keys of width B (dimension-side; hex string ops are fine here).
     ``keep`` are column *names* carried through unchanged."""
     p = pfx.filter(F.ceil(F.col(prefix_len) / 8) == B).filter(F.col(prefix_len) > 0)
-
-    def build_exp_cols():
-        nexp = F.pow(F.lit(2), B * 8 - F.col(prefix_len)).cast("long")
-        base_hex = F.substring(F.lower(F.hex(F.col(prefix_lo))), 1, (B - 1) * 2)
-        last_byte = F.conv(
-            F.substring(F.hex(F.col(prefix_lo)), (B - 1) * 2 + 1, 2), 16, 10
-        ).cast("int")
-        return [
-            F.col(prefix_len).alias("__plen"),
-            base_hex.alias("__bh"),
-            last_byte.alias("__lb"),
-            F.explode(F.sequence(F.lit(0), nexp - 1)).alias("__i"),
-        ]
-
-    exp_cols = _EXPR_MEMO.get_or_build(
-        ("expand", B, prefix_lo, prefix_len), build_exp_cols
+    lo, plen = ident(prefix_lo), ident(prefix_len)
+    kept = [ident(k) for k in keep]
+    exp = p.selectExpr(
+        *kept,
+        f"{plen} AS __plen",
+        f"substring(lower(hex({lo})), 1, {(B - 1) * 2}) AS __bh",
+        f"CAST(conv(substring(hex({lo}), {(B - 1) * 2 + 1}, 2), 16, 10) AS INT) AS __lb",
+        f"explode(sequence(0, CAST(pow(2, {B * 8} - {plen}) AS BIGINT) - 1)) AS __i",
     )
-    exp = p.select(*keep, *exp_cols)
-    key_col = _EXPR_MEMO.get_or_build(
-        ("expand_key",),
-        lambda: F.unhex(
-            F.concat(F.col("__bh"), F.lpad(F.hex(F.col("__lb") + F.col("__i")), 2, "0"))
-        ).alias("__key"),
+    return exp.selectExpr(
+        *kept, "__plen", "unhex(concat(__bh, lpad(hex(__lb + __i), 2, '0'))) AS __key"
     )
-    return exp.select(*keep, "__plen", key_col)
 
 
 def _resolve_blocks(exp: DataFrame, attrs: list[str], group_keys: list[str]) -> DataFrame:
@@ -95,9 +76,7 @@ def _resolve_blocks(exp: DataFrame, attrs: list[str], group_keys: list[str]) -> 
     semantics (outlet/geoip/iter.go: databases walked in configuration
     order, later inserts replace)."""
     has_prio = "__prio" in exp.columns
-    ranks = [F.col("__plen").alias("p")] + (
-        [F.col("__prio").alias("pr")] if has_prio else []
-    )
+    ranks = "__plen AS p" + (", __prio AS pr" if has_prio else "")
     # max_by instead of max(struct(rank, value))[v]: the rank NULLs out
     # where the attribute is unset (those rows are skipped), and the
     # value never has to be orderable — maps/structs ride through
@@ -105,17 +84,13 @@ def _resolve_blocks(exp: DataFrame, attrs: list[str], group_keys: list[str]) -> 
     # value itself is the final tiebreaker so duplicate equal-length
     # (and equal-priority) prefixes setting the same attribute resolve
     # deterministically instead of by partition arrival order.
-    rank = lambda a: F.when(  # noqa: E731
-        F.col(a).isNotNull(),
-        F.struct(
-            *ranks,
-            F.xxhash64(F.to_json(F.struct(F.col(a).alias("v")))).alias("tb"),
-        ),
-    )
-    aggs = _EXPR_MEMO.get_or_build(
-        ("resolve_aggs", tuple(attrs), has_prio),
-        lambda: [F.max_by(F.col(a), rank(a)).alias(a) for a in attrs],
-    )
+    aggs = [
+        F.expr(
+            f"max_by({v}, CASE WHEN {v} IS NOT NULL THEN"
+            f" struct({ranks}, xxhash64(to_json(struct({v} AS v))) AS tb) END)"
+        ).alias(a)
+        for a, v in zip(attrs, map(ident, attrs))
+    ]
     return exp.groupBy(*group_keys).agg(*aggs)
 
 
@@ -246,61 +221,35 @@ def lpm_probe(
     ``{out_prefix}{attr}`` columns.  Marginal cost is the hash joins
     only — whole-stage codegen, no shuffle on the flow side."""
     attrs = prepared.attrs
+    ip = ident(ip_col)
     out = flows
-    matched: dict[str, list] = {a: [] for a in attrs}
     for tag, (blocks, keyed, B) in enumerate(prepared.passes):
         if keyed and exporter_col is None:
             raise ValueError("prepared passes are exporter-keyed; pass exporter_col=")
-        sel = _EXPR_MEMO.get_or_build(
-            ("probe_sel", tag, bool(B), keyed, tuple(attrs)),
-            lambda: (
-                ([F.col("__key").alias(f"__k{tag}")] if B else [])
-                + ([F.col("__e").alias(f"__e{tag}")] if keyed else [])
-                + [F.col(a).alias(f"__{a}_{tag}") for a in attrs]
-            ),
+        b = blocks.selectExpr(
+            *([f"__key AS __k{tag}"] if B else []),
+            *([f"__e AS __e{tag}"] if keyed else []),
+            *[f"{ident(a)} AS `__{a}_{tag}`" for a in attrs],
         )
-        b = blocks.select(*sel)
-        if B:
-            cond = _EXPR_MEMO.get_or_build(
-                ("probe_cond", tag, B, ip_col, keyed, exporter_col),
-                lambda: (
-                    (F.expr(f"substring({ip_col}, 1, {B})") == F.col(f"__k{tag}"))
-                    & (F.col(exporter_col) == F.col(f"__e{tag}"))
-                    if keyed
-                    else F.expr(f"substring({ip_col}, 1, {B})")
-                    == F.col(f"__k{tag}")
-                ),
-            )
-            out = out.join(F.broadcast(b), cond, "left")
-        elif keyed:
-            out = out.join(
-                F.broadcast(b), F.col(exporter_col) == F.col(f"__e{tag}"), "left"
-            )
+        on = ([f"substring({ip}, 1, {B}) = __k{tag}"] if B else []) + (
+            [f"{ident(exporter_col)} = __e{tag}"] if keyed else []
+        )
+        if on:
+            out = out.join(F.broadcast(b), F.expr(" AND ".join(on)), "left")
         else:
             out = out.join(F.broadcast(b))
-        out = out.drop(f"__k{tag}", *([f"__e{tag}"] if keyed else []))
-        for a in attrs:
-            matched[a].append(F.col(f"__{a}_{tag}"))
-
-    npasses = len(prepared.passes)
-    out_cols = _EXPR_MEMO.get_or_build(
-        ("probe_out", tuple(attrs), npasses, out_prefix),
-        lambda: {
-            a: (
-                F.coalesce(*matched[a]).alias(out_prefix + a)
-                if matched[a]
-                else F.lit(None).alias(out_prefix + a)
-            )
-            for a in attrs
-        },
-    )
-    # empty prefix table (nothing configured yet): an LPM miss for
-    # every row — NULL attrs, not a zero-arg coalesce crash
-    out = out.withColumns({out_prefix + a: out_cols[a] for a in attrs})
-    out = out.drop(
-        *[f"__{a}_{t}" for a in attrs for t in range(npasses)]
-    )
-    return out
+    # one projection: flows' columns, then each attribute coalesced
+    # across the passes longest-first.  An empty prefix table (nothing
+    # configured yet) is an LPM miss for every row: NULL attrs.
+    passes = range(len(prepared.passes))
+    found = {
+        out_prefix + a: (
+            f"coalesce({', '.join(f'`__{a}_{t}`' for t in passes)})" if passes else "NULL"
+        )
+        for a in attrs
+    }
+    kept = set(flows.columns)
+    return select_replacing(out, found, drop=[c for c in out.columns if c not in kept])
 
 
 def rib_lookup_join(

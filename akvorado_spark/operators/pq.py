@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.sqltext import array_lit, ident
+
 
 def global_scale(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """1-row frame: the corpus-wide max |element| (the shared int8
@@ -65,8 +67,9 @@ def quantize_global(
     return df.crossJoin(F.broadcast(scale)).withColumn(out_col, q).drop("gmax")
 
 
-def _subslice(col, j: int, sub: int):
-    return F.slice(col, j * sub + 1, sub)
+def _subslice(name: str, j: int, sub: int) -> str:
+    """SQL text of subvector ``j`` (width ``sub``) of column ``name``."""
+    return f"slice({ident(name)}, {j * sub + 1}, {sub})"
 
 
 def pq_codebooks_from_seeds(
@@ -114,15 +117,15 @@ def pq_train_codebooks(
     sub = dim // m
     books = []
     for j in range(m):
-        sl = quantized.select(_subslice(F.col(q_col), j, sub).alias("sv"))
+        sl = quantized.select(F.expr(_subslice(q_col, j, sub)).alias("sv"))
         cents = [
             list(r["sv"])
             for r in quantized.orderBy(id_col).limit(ks).select(
-                _subslice(F.col(q_col), j, sub).alias("sv")
+                F.expr(_subslice(q_col, j, sub)).alias("sv")
             ).collect()
         ]
         for _ in range(iters):
-            assigned = sl.withColumn("c", _assign_expr(F.col("sv"), cents))
+            assigned = sl.withColumn("c", F.expr(_assign_sql("sv", cents)))
             means = (
                 assigned.groupBy("c")
                 .agg(
@@ -141,107 +144,44 @@ def pq_train_codebooks(
     return books
 
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
-
-_CB_LIT_CACHE = LruMemo(maxsize=32)
-# finished integer-fold Columns keyed by operand expression text.
-# CONTRACT (same as similarity._FOLD_MEMO): only trees built from
-# unresolved columns are stored; frame-bound operands build fresh,
-# uncached (cacheable_operands).
-_INT_FOLD_MEMO = LruMemo(maxsize=256)
+def _codebook_sql(book: list[list[int]]) -> str:
+    """A codebook (or centroid list) as a nested INT array literal."""
+    return array_lit(book, lambda code: array_lit(code, lambda v: str(int(v))))
 
 
-def _book_key(book: list[list[int]]) -> tuple:
-    """Hashable identity of a codebook's VALUES — the memo key piece
-    that lets expression trees parameterized by a book (assignment
-    argmins, ADC tables) be cached under stable keys.  The lambda
-    variables inside those trees print a fresh name every invocation,
-    so keying on the rendered expression alone never repeats (the r13
-    fold memos silently missed on every such site — measured 1.2 s of
-    rebuilt transforms per lmdata build)."""
-    return tuple(tuple(int(v) for v in code) for code in book)
-
-
-def _codebook_literal(book: list[list[int]]):
-    """Literal Column for a codebook, memoized on the values: building
-    hundreds of F.lit() nodes costs real driver time (py4j round trips)
-    and the same books recur across encode/probe/table expressions and
-    bench repeats.  Literal columns carry no expression ids, so one
-    Column tree is safely reusable anywhere in the session.  The memo
-    is a bounded LRU so a long-lived service retraining codebooks
-    doesn't accumulate expression trees forever."""
-    return _CB_LIT_CACHE.get_or_build(
-        _book_key(book),
-        lambda: F.array(
-            *[F.array(*[F.lit(int(v)) for v in code]) for code in book]
-        ),
+def _int_sqdist_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST((x - y) * (x - y) AS BIGINT)),"
+        " 0L, (acc, x) -> acc + x)"
     )
 
 
-def _int_sqdist(a, b):
-    # memoized on operand text: lambda-API fold construction costs
-    # ~50 ms of py4j round trips per call (see similarity.dot, r13)
-    key = ("int_sqdist", str(a), str(b))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: ((x - y) * (x - y)).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
+def _int_dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x * y AS BIGINT)),"
+        " 0L, (acc, x) -> acc + x)"
     )
 
 
-def _int_dot(a, b):
-    key = ("int_dot", str(a), str(b))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
-    )
+def _int_dot(a: str, b: str):
+    """Exact BIGINT dot product of the int-array columns ``a``, ``b``."""
+    return F.expr(_int_dot_sql(ident(a), ident(b)))
 
 
-def _assign_expr(subvec, book):
+def _assign_sql(subvec: str, book: list[list[int]]) -> str:
     """argmin over the codebook literal; (dist, idx) struct min ties to
     the lowest code index.  Pure codegen — no shuffle, no UDF.
-
-    Takes the PYTHON book (not its literal Column) so the finished
-    argmin tree can be memoized on (operand text, book values): the
-    transform lambda's variable prints a fresh name per invocation, so
-    the inner fold memo can never hit — memoizing the whole expression
-    here is what makes repeat builds free."""
-    key = ("assign", str(subvec), _book_key(book))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.array_min(
-            F.transform(
-                _codebook_literal(book),
-                lambda cb, c: F.struct(
-                    _int_sqdist(subvec, cb).alias("d"), c.alias("c")
-                ),
-            )
-        )["c"],
-        cache_if=lambda: cacheable_operands(subvec),
+    ``subvec`` is SQL text: a column name or a :func:`_subslice` of one."""
+    return (
+        f"array_min(transform({_codebook_sql(book)}, (cb, c) ->"
+        f" struct({_int_sqdist_sql(subvec, 'cb')} AS d, c AS c))).c"
     )
 
 
-def _adc_table_expr(qvec, book):
-    """One query-side ADC table: ⟨q_sub, codeword⟩ per code — the
-    transform over the codebook literal, memoized like
-    :func:`_assign_expr` (same lambda-variable key problem)."""
-    key = ("adc_table", str(qvec), _book_key(book))
-    return _INT_FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.transform(
-            _codebook_literal(book), lambda cb: _int_dot(qvec, cb)
-        ),
-        cache_if=lambda: cacheable_operands(qvec),
-    )
+def _adc_table_sql(qvec: str, book: list[list[int]]) -> str:
+    """One query-side ADC table: ⟨q_sub, codeword⟩ per code, as one
+    transform over the codebook literal.  ``qvec`` is SQL text."""
+    return f"transform({_codebook_sql(book)}, cb -> {_int_dot_sql(qvec, 'cb')})"
 
 
 def pq_encode(
@@ -255,13 +195,10 @@ def pq_encode(
     argmin inside whole-stage codegen."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    codes = F.array(
-        *[
-            _assign_expr(_subslice(F.col(q_col), j, sub), codebooks[j])
-            for j in range(m)
-        ]
+    codes = ", ".join(
+        _assign_sql(_subslice(q_col, j, sub), codebooks[j]) for j in range(m)
     )
-    return quantized.withColumn(code_col, codes).drop(q_col)
+    return quantized.withColumn(code_col, F.expr(f"array({codes})")).drop(q_col)
 
 
 def pq_adc_topk(
@@ -285,12 +222,10 @@ def pq_adc_topk(
     """
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    qt = queries.select(
-        q_id_col,
+    qt = queries.selectExpr(
+        ident(q_id_col),
         *[
-            _adc_table_expr(
-                _subslice(F.col(q_col), j, sub), codebooks[j]
-            ).alias(f"__t{j}")
+            f"{_adc_table_sql(_subslice(q_col, j, sub), codebooks[j])} AS __t{j}"
             for j in range(m)
         ],
     )
@@ -344,12 +279,11 @@ def ivfpq_encode(
     bucketed by ``cell`` so a probe is a partition-pruned scan.
     Residuals live in [-254, 254] — still exact 32-bit ints.
     """
-    cell_lit = _codebook_literal(cells)
-    enc = quantized.withColumn(cell_col, _assign_expr(F.col(q_col), cells))
-    resid = F.zip_with(
-        F.col(q_col),
-        F.element_at(cell_lit, F.col(cell_col) + 1),
-        lambda a, b: a - b,
+    q = ident(q_col)
+    enc = quantized.withColumn(cell_col, F.expr(_assign_sql(q, cells)))
+    resid = F.expr(
+        f"zip_with({q}, element_at({_codebook_sql(cells)}, {ident(cell_col)} + 1),"
+        " (a, b) -> a - b)"
     )
     enc = enc.withColumn("__rv", resid)
     return pq_encode(enc, codebooks, q_col="__rv", code_col=code_col).drop(q_col)
@@ -387,32 +321,26 @@ def ivfpq_topk(
     sub = len(codebooks[0][0])
     from pyspark.sql import Window
 
-    cell_lit = _codebook_literal(cells)
-    scored_cells = F.transform(
-        cell_lit,
-        lambda cb, c: F.struct(
-            _int_sqdist(F.col(q_col), cb).alias("d"), c.alias("c")
-        ),
-    )
+    q = ident(q_col)
+    cell_lit = _codebook_sql(cells)
     # nprobe nearest cells per query: array_sort on (d, c) structs IS
     # the L2-then-lowest-cell tie rule — no window, no exchange
-    probed = F.slice(F.array_sort(scored_cells), 1, nprobe)
+    probed = F.expr(
+        f"slice(array_sort(transform({cell_lit}, (cb, c) ->"
+        f" struct({_int_sqdist_sql(q, 'cb')} AS d, c AS c))), 1, {nprobe})"
+    )
     probes = queries.select(
         q_id_col, q_col, F.explode(probed).alias("x")
     ).select(q_id_col, q_col, F.col("x.c").alias(cell_col))
     # ⟨q, c⟩ correction term per (query, cell) — without it, scores
     # from different probed cells are not comparable (ADVICE r7)
-    q_cell_dot = _int_dot(
-        F.col(q_col), F.element_at(cell_lit, F.col(cell_col) + 1)
-    )
-    probes = probes.select(
-        q_id_col,
-        cell_col,
-        q_cell_dot.alias("__qc"),
+    q_cell_dot = _int_dot_sql(q, f"element_at({cell_lit}, {ident(cell_col)} + 1)")
+    probes = probes.selectExpr(
+        ident(q_id_col),
+        ident(cell_col),
+        f"{q_cell_dot} AS __qc",
         *[
-            _adc_table_expr(
-                _subslice(F.col(q_col), j, sub), codebooks[j]
-            ).alias(f"__t{j}")
+            f"{_adc_table_sql(_subslice(q_col, j, sub), codebooks[j])} AS __t{j}"
             for j in range(m)
         ],
     )
@@ -630,7 +558,7 @@ def exact_rerank_topk(
     scored = cand.select(
         q_id_col,
         id_col,
-        _int_dot(F.col(base_q_col), F.col(q_col)).alias("exact_score"),
+        _int_dot(base_q_col, q_col).alias("exact_score"),
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("exact_score").desc(), F.col(id_col)

@@ -19,60 +19,41 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
-
-# finished fold Columns (dot/norm) keyed by operand expression text —
-# see the dot() docstring for the measured py4j construction cost.
-# CONTRACT: keys are the operands' printed names, so only trees built
-# from UNRESOLVED columns (F.col/F.expr) are stored; a frame-bound
-# operand (df["x"] — prints identically) builds fresh and is never
-# cached (cacheable_operands), so it cannot poison later callers.
-_FOLD_MEMO = LruMemo(maxsize=256)
+from akvorado_spark.functions.sqltext import array_lit, double_lit, ident, long_lit
 
 
-def dot(a, b):
-    """Dot product of two array<float/double> columns (JVM-side fold).
-
-    Memoized on the operands' expression text: constructing the fold
-    through the Python lambda API costs ~50 ms of py4j round trips per
-    call (measured r13), repeated dozens of times per ML query build —
-    while the finished Column is an immutable expression tree that can
-    be reused verbatim wherever the same operands recur.  Pass
-    unresolved columns (``F.col``); frame-bound operands work but skip
-    the memo (see ``_FOLD_MEMO``)."""
-    key = ("dot", str(a), str(b))
-    return _FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        cache_if=lambda: cacheable_operands(a, b),
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0D, (acc, x) -> acc + x)"
     )
 
 
-def norm(a):
-    """L2 norm of an array column (JVM-side fold; memoized like
-    :func:`dot`)."""
-    key = ("norm", str(a))
-    return _FOLD_MEMO.get_or_build(
-        key,
-        lambda: F.sqrt(
-            F.aggregate(
-                a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        ),
-        cache_if=lambda: cacheable_operands(a),
-    )
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def cosine(a, b):
-    """Cosine similarity of two array<float/double> columns (JVM-side).
+def dot(a: str, b: str):
+    """Dot product of the array<float/double> columns named ``a`` and
+    ``b`` (a JVM-side fold, built as one SQL expression)."""
+    return F.expr(_dot_sql(ident(a), ident(b)))
+
+
+def norm(a: str):
+    """L2 norm of the array column named ``a`` (JVM-side fold)."""
+    return F.expr(_norm_sql(ident(a)))
+
+
+def cosine(a: str, b: str):
+    """Cosine similarity of the array<float/double> columns named
+    ``a`` and ``b`` (JVM-side).
 
     For O(n²) pair scans, precompute ``norm`` per vector instead — the
     fold is identical so the doubles are bit-identical."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    a, b = ident(a), ident(b)
+    return F.expr(
+        f"{_dot_sql(a, b)} / nullif({_norm_sql(a)} * {_norm_sql(b)}, 0D)"
+    )
 
 
 def brute_force_topk(
@@ -94,7 +75,7 @@ def brute_force_topk(
     scored = vectors.crossJoin(F.broadcast(queries)).select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -107,14 +88,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-# literal plane Columns memoized on (kind, dim, out, seed[, micro]):
-# building hundreds of F.lit() nodes costs real driver time (py4j
-# round trips), the planes are deterministic, and literal columns are
-# reusable expression trees.  Bounded LRU: a long-lived service that
-# keeps re-deriving plane sets must not accumulate them forever.
-_PLANE_LIT_CACHE = LruMemo(maxsize=32)
 
 
 def suggest_planes(n_vectors: int, target_bucket: int = 64) -> int:
@@ -135,34 +108,27 @@ def suggest_planes(n_vectors: int, target_bucket: int = 64) -> int:
     return max(4, math.ceil(math.log2(n_vectors / target_bucket)))
 
 
-def lsh_sketch(vec_col, planes: np.ndarray):
-    """Sign-bit sketch (one long) of a vector column against fixed
-    hyperplanes — pure SQL fold per plane.
+def _plane_dot_sql(vec: str, plane, cast: str = "DOUBLE") -> str:
+    """Fold of a vector column against one literal plane: DOUBLE
+    literals, or micro-fixed-point BIGINT ones with ``cast="BIGINT"``."""
+    lits = array_lit(plane, double_lit if cast == "DOUBLE" else long_lit)
+    zero = "0D" if cast == "DOUBLE" else "0L"
+    return (
+        f"aggregate(zip_with({vec}, {lits}, (x, y) -> CAST(x AS {cast}) * y),"
+        f" {zero}, (acc, x) -> acc + x)"
+    )
 
-    The returned Column is memoized on (column, planes): building it
-    costs n_planes × dim ``F.lit`` py4j round trips plus the fold
-    lambdas (~1.2 s per call at 12×64 planes — the dominant cost of
-    every LSH query's *build* phase, measured r13), while the finished
-    expression tree is immutable and reusable across invocations."""
 
-    def build():
-        bits = []
-        for plane in planes:
-            arr = F.array(*[F.lit(float(x)) for x in plane])
-            dot = F.aggregate(
-                F.zip_with(vec_col, arr, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0)))
-        out = None
-        for i, b in enumerate(bits):
-            term = F.shiftleft(b, i)
-            out = term if out is None else out.bitwiseOR(term)
-        return out
-
-    key = ("sketch", str(vec_col), planes.shape, planes.tobytes())
-    return _PLANE_LIT_CACHE.get_or_build(key, build)
+def lsh_sketch(vec_col: str, planes: np.ndarray):
+    """Sign-bit sketch (one long) of the vector column named
+    ``vec_col`` against fixed hyperplanes — one SQL fold per plane,
+    the planes written as DOUBLE literal arrays in the same text."""
+    vec = ident(vec_col)
+    bits = [
+        f"shiftleft(IF({_plane_dot_sql(vec, plane)} > 0, 1L, 0L), {i})"
+        for i, plane in enumerate(planes)
+    ]
+    return F.expr(" | ".join(bits))
 
 
 def lsh_topk(
@@ -194,8 +160,8 @@ def lsh_topk(
     from pyspark.sql import Window
 
     planes = _hyperplanes(dim, n_planes, seed)
-    v = vectors.withColumn("__sketch", lsh_sketch(F.col(vec_col), planes))
-    q = queries.withColumn("__qsketch", lsh_sketch(F.col(q_vec_col), planes))
+    v = vectors.withColumn("__sketch", lsh_sketch(vec_col, planes))
+    q = queries.withColumn("__qsketch", lsh_sketch(q_vec_col, planes))
     if multiprobe:
         if multiprobe != 1:
             raise ValueError("multiprobe supports 0 (off) or 1 (1-bit flips)")
@@ -211,7 +177,7 @@ def lsh_topk(
     scored = cand.select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -240,7 +206,7 @@ def ivf_assign(
     one shuffle of (row, cell) pairs, standard IVF build cost.
     """
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "__dot", dot(F.col(vec_col), F.col(c_vec_col))
+        "__dot", dot(vec_col, c_vec_col)
     )
     keys = [c for c in vectors.columns]
     return (
@@ -273,7 +239,7 @@ def ivf_topk(
     v = ivf_assign(vectors, centroids, vec_col)
     # query → its nprobe nearest cells
     qs = queries.crossJoin(F.broadcast(centroids)).withColumn(
-        "__dot", dot(F.col(q_vec_col), F.col("c_vec"))
+        "__dot", dot(q_vec_col, "c_vec")
     )
     wq = Window.partitionBy(q_id_col).orderBy(F.desc("__dot"), F.asc("c_id"))
     probes = (
@@ -285,7 +251,7 @@ def ivf_topk(
     scored = cand.select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("sim"),
+        F.round(cosine(vec_col, q_vec_col), 6).alias("sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
@@ -329,7 +295,7 @@ def neardup_pairs(
     LSH-bucketed self-join, exact cosine verification inside buckets."""
     planes = _hyperplanes(dim, n_planes, seed)
     v = vectors.select(
-        F.col(id_col), F.col(vec_col), lsh_sketch(F.col(vec_col), planes).alias("__sketch")
+        F.col(id_col), F.col(vec_col), lsh_sketch(vec_col, planes).alias("__sketch")
     )
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(
@@ -339,7 +305,7 @@ def neardup_pairs(
     ).select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
-        F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6).alias("sim"),
+        F.round(cosine(f"a.{vec_col}", f"b.{vec_col}"), 6).alias("sim"),
     )
     return pairs.filter(F.col("sim") >= threshold)
 
@@ -499,7 +465,7 @@ def kmeans_centroids_hierarchical(
     )
     # one-time assignment of every vector to its super (√k broadcast)
     scored = vectors.select(id_col, vec_col).crossJoin(F.broadcast(supers))
-    scored = scored.withColumn("__dot", dot(F.col(vec_col), F.col("s_vec")))
+    scored = scored.withColumn("__dot", dot(vec_col, "s_vec"))
     members = scored.groupBy(id_col, vec_col).agg(
         F.expr("max_by(s_id, struct(__dot, -s_id))").alias("__super")
     ).localCheckpoint(eager=False)
@@ -522,7 +488,7 @@ def kmeans_centroids_hierarchical(
         # vectors join ONLY their super's children (k rows total, ~√k
         # per super) — never a full N×k crossJoin
         cand = members.join(cents, "__super").withColumn(
-            "__dot", dot(F.col(vec_col), F.col("c_vec"))
+            "__dot", dot(vec_col, "c_vec")
         )
         assigned = cand.groupBy(id_col, vec_col, "__super").agg(
             F.expr("max_by(__child, struct(__dot, -__child))").alias("__child")
@@ -588,7 +554,7 @@ def split_centroids(
         centroids, n_super, id_col=c_id_col, vec_col=c_vec_col
     ).select(F.col("c_id").alias("s_id"), F.col("c_vec").alias("s_vec"))
     scored = centroids.crossJoin(F.broadcast(supers)).withColumn(
-        "__ssim", F.round(cosine(F.col(c_vec_col), F.col("s_vec")), 6)
+        "__ssim", F.round(cosine(c_vec_col, "s_vec"), 6)
     )
     children = scored.groupBy(*centroids.columns).agg(
         F.expr("max_by(s_id, struct(__ssim, -s_id))").alias("__super")
@@ -624,7 +590,7 @@ def assign_cells_two_level(
     """
     keys = list(vectors.columns)
     s1 = vectors.crossJoin(F.broadcast(supers)).withColumn(
-        "__ssim", F.round(cosine(F.col(vec_col), F.col("s_vec")), 6)
+        "__ssim", F.round(cosine(vec_col, "s_vec"), 6)
     )
     probed = s1.groupBy(*keys).agg(
         F.expr("max_by(s_id, struct(__ssim, -s_id))").alias("__probe")
@@ -632,7 +598,7 @@ def assign_cells_two_level(
     cand = probed.join(
         children.withColumnRenamed("__super", "__probe"), "__probe"
     ).withColumn(
-        "__sim", F.round(cosine(F.col(vec_col), F.col(c_vec_col)), 6)
+        "__sim", F.round(cosine(vec_col, c_vec_col), 6)
     )
     return cand.groupBy(*keys).agg(
         F.expr(f"max_by({c_id_col}, struct(__sim, -{c_id_col}))").alias(out_col),
@@ -665,7 +631,7 @@ def assign_cells(
     to it).  The two-level variant is :func:`assign_cells_two_level`."""
     keys = list(vectors.columns)
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "__sim", F.round(cosine(F.col(vec_col), F.col("c_vec")), 6)
+        "__sim", F.round(cosine(vec_col, "c_vec"), 6)
     )
     return scored.groupBy(*keys).agg(
         F.expr("max_by(c_id, struct(__sim, -c_id))").alias(out_col),
@@ -711,7 +677,7 @@ def semdedup(
     semdedup variants over one materialized corpus can fold the norms
     once and share them — each variant then copies a double instead of
     re-folding the array).  The column must hold exactly
-    ``norm(F.col(vec_col))`` and ``vectors`` should already be
+    ``norm(vec_col)`` and ``vectors`` should already be
     materialized (e.g. localCheckpoint) — on a lazy source, projection
     collapse can push the caller's fold INTO the N×k assignment
     crossJoin, making the "shared" fold more expensive than the
@@ -742,7 +708,7 @@ def semdedup(
     # crossJoin 26× with zero ReusedExchange).  Materializing N rows
     # once replaces three full assignment passes at any corpus size.
     if norm_col is None:
-        withn = assigned.withColumn("__n", norm(F.col(vec_col)))
+        withn = assigned.withColumn("__n", norm(vec_col))
     else:
         withn = assigned.withColumnRenamed(norm_col, "__n")
     withn = withn.localCheckpoint(eager=False)
@@ -758,7 +724,7 @@ def semdedup(
         (F.col("__bcsim") == F.col("__csim")) & (F.col("__bid") < F.col(id_col))
     )
     pair_cos = F.round(
-        dot(F.col(vec_col), F.col("__bvec"))
+        dot(vec_col, "__bvec")
         / F.nullif(F.col("__n") * F.col("__bn"), F.lit(0.0)),
         6,
     )
@@ -798,17 +764,10 @@ def project_embeddings(
     retries, other engines), so projections are reproducible.
     """
     planes = _hyperplanes(dim, out_dim, seed=seed)  # (out_dim, dim)
-    inv = 1.0 / float(np.sqrt(out_dim))
-    comps = []
-    for plane in planes:
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        comps.append(d * F.lit(inv))
-    return df.withColumn(out_col, F.array(*comps))
+    inv = double_lit(1.0 / float(np.sqrt(out_dim)))
+    vec = ident(vec_col)
+    comps = [f"{_plane_dot_sql(vec, plane)} * {inv}" for plane in planes]
+    return df.withColumn(out_col, F.expr(f"array({', '.join(comps)})"))
 
 
 def project_embeddings_fixedpoint(
@@ -831,33 +790,9 @@ def project_embeddings_fixedpoint(
     scale plus per-element quantization error, so ordering/JL geometry
     carries over; the float variant stays the production path."""
     planes = _hyperplanes(dim, out_dim, seed=seed)
-    key = ("fixedpoint", dim, out_dim, seed, micro)
-    arrs = _PLANE_LIT_CACHE.get_or_build(
-        key,
-        lambda: [
-            F.array(
-                *[
-                    F.lit(int(round(float(x) * micro))).cast("long")
-                    for x in plane
-                ]
-            )
-            for plane in planes
-        ],
-    )
-    # the finished per-plane fold array is itself memoized (keyed on
-    # the plane identity + operand name): the out_dim lambda-API folds
-    # cost ~45 ms each to construct and recur identically on every
-    # build (r14; same class as the pq assignment/ADC-table memos)
-    def _build():
-        comps = []
-        for arr in arrs:
-            d = F.aggregate(
-                F.zip_with(F.col(vec_col), arr, lambda x, y: x.cast("long") * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            comps.append(d)
-        return F.array(*comps)
-
-    proj = _FOLD_MEMO.get_or_build((*key, vec_col), _build)
-    return df.withColumn(out_col, proj)
+    vec = ident(vec_col)
+    comps = [
+        _plane_dot_sql(vec, [int(round(float(x) * micro)) for x in plane], "BIGINT")
+        for plane in planes
+    ]
+    return df.withColumn(out_col, F.expr(f"array({', '.join(comps)})"))

@@ -10,13 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo, cacheable_operands
-
-# finished text-metric expression trees keyed on operand text +
-# constants (same contract as the similarity/pq fold memos: unresolved
-# operands only — cacheable_operands gates the build path)
-_TEXT_EXPR_MEMO = LruMemo(maxsize=64)
-
 # Tiny embedded stopword lists (public, common knowledge) for the
 # n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -182,33 +175,19 @@ def gopher_quality_pass(
 
     ``fractions``: pass :func:`quality_metric_fractions` output built on
     pre-materialized token/line columns to avoid re-splitting the text
-    per rule.
-
-    The self-built-fractions form is memoized on (operand text,
-    thresholds) — a pure function of them; its four lambda-API
-    constructions cost ~0.2 s of py4j per build otherwise (r14)."""
-
-    def build():
-        fr = fractions if fractions is not None else quality_metric_fractions(text)
-        n = fr["meanwlen"][1]  # the word count every per-word metric divides by
-        return (
-            (n >= min_words)
-            & (n <= max_words)
-            & (_frac(fr["meanwlen"]) >= 3)
-            & (_frac(fr["meanwlen"]) <= 10)
-            & (_frac(fr["symratio"]) < 0.1)
-            & (_frac(fr["bullet"]) < 0.9)
-            & (_frac(fr["ellipsis"]) < 0.3)
-            & (_frac(fr["alpha"]) >= 0.8)
-            & (_frac(fr["repline"]) < 0.3)
-        )
-
-    if fractions is not None:  # caller-built columns: never cache
-        return build()
-    return _TEXT_EXPR_MEMO.get_or_build(
-        ("gopher", str(text), min_words, max_words),
-        build,
-        cache_if=lambda: cacheable_operands(text),
+    per rule."""
+    fr = fractions if fractions is not None else quality_metric_fractions(text)
+    n = fr["meanwlen"][1]  # the word count every per-word metric divides by
+    return (
+        (n >= min_words)
+        & (n <= max_words)
+        & (_frac(fr["meanwlen"]) >= 3)
+        & (_frac(fr["meanwlen"]) <= 10)
+        & (_frac(fr["symratio"]) < 0.1)
+        & (_frac(fr["bullet"]) < 0.9)
+        & (_frac(fr["ellipsis"]) < 0.3)
+        & (_frac(fr["alpha"]) >= 0.8)
+        & (_frac(fr["repline"]) < 0.3)
     )
 
 

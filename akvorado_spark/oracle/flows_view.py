@@ -11,6 +11,11 @@ engines).  Weights are integer "bytes" so sums are exact.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import weakref
+from weakref import WeakKeyDictionary
+
 # Valid in both Spark SQL and DuckDB.
 FLOWS_VIEW_SQL = """
 SELECT
@@ -55,7 +60,13 @@ FROM lineitem
 """
 
 
-_MATERIALIZED: dict[tuple[int, str, str], str] = {}
+# session → {(sf_dir, view name): finalizer of its parquet copy}.
+# WeakKeyDictionary: entries die with their session, and a recycled
+# id() can never alias a new session (as sources/tables.py does).  Each
+# copy's directory is removed by its weakref.finalize: when a newer
+# scale factor supersedes it, when the session is collected, or at
+# interpreter exit.
+_MATERIALIZED: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def register_spark_view(spark, sf_dir: str, name: str = "flows_v") -> None:
@@ -75,22 +86,22 @@ def register_spark_view(spark, sf_dir: str, name: str = "flows_v") -> None:
     nothing is keyed on the input path across processes, so every run
     still computes from the source parquet.
     """
-    key = (id(spark), sf_dir, name)
-    if key in _MATERIALIZED:
+    per = _MATERIALIZED.setdefault(spark, {})
+    key = (sf_dir, name)
+    if key in per:
         return
-    import shutil
-    import tempfile
-
     from akvorado_spark.sources.tables import load_table
 
     load_table(spark, "lineitem", sf_dir).createOrReplaceTempView("lineitem")
     root = tempfile.mkdtemp(prefix="akvorado_flows_")
+    # registered before the write: even a failed write's directory goes
+    done = weakref.finalize(spark, shutil.rmtree, root, ignore_errors=True)
     spark.sql(FLOWS_VIEW_SQL).write.mode("overwrite").parquet(root)
     spark.read.parquet(root).createOrReplaceTempView(name)
     # drop stale materializations of other scale factors for this session
-    for k in [k for k in _MATERIALIZED if k[0] == id(spark) and k[2] == name and k != key]:
-        shutil.rmtree(_MATERIALIZED.pop(k), ignore_errors=True)
-    _MATERIALIZED[key] = root
+    for k in [k for k in per if k[1] == name]:
+        per.pop(k)()
+    per[key] = done
 
 
 def oracle_view_sql() -> str:

@@ -805,7 +805,7 @@ def _embed_neardup(spark, sf_dir):
         load_table(spark, "embeddings", sf_dir, spread=True)
         .filter("vec_id % 5 = 0")
         .select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("__n")
+            "vec_id", "embedding", norm("embedding").alias("__n")
         )
         .localCheckpoint(eager=False)
     )
@@ -829,7 +829,7 @@ def _embed_neardup(spark, sf_dir):
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
             F.round(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
+                dot("a.embedding", "b.embedding")
                 / F.nullif(F.col("a.__n") * F.col("b.__n"), F.lit(0.0)),
                 6,
             ).alias("sim"),

@@ -12,7 +12,7 @@ single shared separator, ``replace``'s scan resumes after the
 replacement and a consumed boundary char prevents the next adjacent
 pair from matching ('a b a b' would merge once instead of twice).
 With per-symbol wrapping the non-overlapping left-to-right scan is
-EXACTLY the greedy fold ``operators/bpe._merge_expr`` computes
+EXACTLY the greedy fold ``operators/bpe._merge_sql`` computes
 (pinned by tests/test_vocab_gate.py on the trap cases).
 
 TF-IDF replay: ranking rides an integer micro-fixed-point weight

@@ -37,16 +37,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from akvorado_spark.functions.memo import LruMemo
+from akvorado_spark.functions.sqltext import ident, str_lit
 
 OTHER = "Other"
-
-# finished Column trees keyed by the request constants that determine
-# them (time column, step, weight SQL, dims, value type): every Column
-# operation is 1-3 py4j round trips and an axis build issues ~900 of
-# them (~0.5 s, r13 profile) while the expressions are pure functions
-# of names + literals, identical across invocations and axes
-_EXPR_MEMO = LruMemo(maxsize=256)
 
 
 @dataclass(frozen=True)
@@ -77,49 +70,37 @@ class LineRequest:
 
 
 def _agg_col(req: LineRequest) -> Column:
-    return _EXPR_MEMO.get_or_build(
-        ("agg", req.agg_sql, req.value_type),
-        lambda: (F.expr(req.agg_sql) if req.agg_sql else F.sum("__w")).cast(
-            req.value_type
-        ),
-    )
+    return F.expr(f"CAST({req.agg_sql or 'sum(__w)'} AS {req.value_type})")
 
 
-def _bucket_col(time_col: str, step_us: int) -> Column:
-    """The aligned-bucket expression (memoized on its two inputs)."""
-    return _EXPR_MEMO.get_or_build(
-        ("bucket", time_col, step_us),
-        lambda: (
-            F.col("__start_us")
-            + F.floor(
-                (F.unix_micros(F.col(time_col).cast("timestamp")) - F.col("__start_us"))
-                / step_us
-            )
-            * step_us
-        ).cast("long"),
+def _bucket_col(time_col: str, step_us: int) -> str:
+    """SQL text of the aligned-bucket expression."""
+    ts = f"unix_micros(CAST({ident(time_col)} AS TIMESTAMP))"
+    return f"CAST(__start_us + FLOOR(({ts} - __start_us) / {step_us}) * {step_us} AS BIGINT)"
+
+
+def _base_frame(df: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame:
+    """One projection off the bounds join (J9 shape: a 1-row scalar
+    frame): the bucket, the weight or the raw aggregate inputs, and
+    the dimensions."""
+    step_us = req.interval_s * 1_000_000
+    if req.agg_sql:
+        values = [ident(c) for c in req.base_cols]
+    else:
+        values = [f"CAST({req.weight_sql} AS BIGINT) AS __w"]
+    return df.join(F.broadcast(bounds)).selectExpr(
+        f"{_bucket_col(req.time_col, step_us)} AS __bucket",
+        *values,
+        *[ident(d) for d in req.dimensions],
     )
 
 
 def _bucket_spine(bounds: DataFrame, step_us: int) -> DataFrame:
-    """The WITH-FILL bucket spine off the 1-row bounds frame (O1);
-    expression pieces memoized on the step."""
-    icol, bcol = _EXPR_MEMO.get_or_build(
-        ("spine", step_us),
-        lambda: (
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.floor(
-                        (F.col("__max_us") - F.col("__start_us")) / step_us
-                    ).cast("long"),
-                )
-            ).alias("__i"),
-            (F.col("__start_us") + F.col("__i") * step_us)
-            .cast("long")
-            .alias("__bucket"),
-        ),
-    )
-    return bounds.select(icol, "__start_us").select(bcol)
+    """The WITH-FILL bucket spine off the 1-row bounds frame (O1)."""
+    last = f"CAST(FLOOR((__max_us - __start_us) / {step_us}) AS BIGINT)"
+    return bounds.selectExpr(
+        f"explode(sequence(0L, {last})) AS __i", "__start_us"
+    ).selectExpr(f"CAST(__start_us + __i * {step_us} AS BIGINT) AS __bucket")
 
 
 def _top_rows(base: DataFrame, req: LineRequest, bounds: DataFrame) -> DataFrame:
@@ -185,20 +166,8 @@ def top_rows_frame(df: DataFrame, req: LineRequest) -> DataFrame:
     dimension columns renamed to the other axis's names) as
     ``compile_line(..., rows=...)``.
     """
-    dims = list(req.dimensions)
-    step_us = req.interval_s * 1_000_000
     bounds = _bounds_frame(df, req)
-    bucket_col = _bucket_col(req.time_col, step_us).alias("__bucket")
-    joined = df.join(F.broadcast(bounds))
-    if req.agg_sql:
-        base = joined.select(bucket_col, *req.base_cols, *dims)
-    else:
-        wcol = _EXPR_MEMO.get_or_build(
-            ("w", req.weight_sql),
-            lambda: F.expr(req.weight_sql).cast("long").alias("__w"),
-        )
-        base = joined.select(bucket_col, wcol, *dims)
-    return _top_rows(base, req, bounds)
+    return _top_rows(_base_frame(df, req, bounds), req, bounds)
 
 
 def compile_line(
@@ -227,20 +196,7 @@ def compile_line(
     step_us = req.interval_s * 1_000_000
 
     bounds = _bounds_frame(df, req)
-
-    # single select off the bounds join (one projection node instead of
-    # a withColumn chain — each chained op costs an analysis round and
-    # py4j round trips; ~870 calls per axis before r13)
-    bucket_col = _bucket_col(req.time_col, step_us).alias("__bucket")
-    joined = df.join(F.broadcast(bounds))  # 1-row scalar frame (J9 shape)
-    if req.agg_sql:
-        base = joined.select(bucket_col, *req.base_cols, *dims)
-    else:
-        wcol = _EXPR_MEMO.get_or_build(
-            ("w", req.weight_sql),
-            lambda: F.expr(req.weight_sql).cast("long").alias("__w"),
-        )
-        base = joined.select(bucket_col, wcol, *dims)
+    base = _base_frame(df, req, bounds)
 
     if not dims:
         # dimensionless request (total-traffic graph; also the
@@ -279,21 +235,14 @@ def compile_line(
     # cheaper than analyzing the derived `base` plan
     dtypes = dict(df.dtypes)
     passthrough = tuple(dtypes[d] in ("string", "binary") for d in dims)
-    fold_cols = _EXPR_MEMO.get_or_build(
-        ("fold", tuple(dims), passthrough),
-        lambda: [
-            F.when(
-                F.col("__top").isNotNull(),
-                F.col(d) if p else F.col(d).cast("string"),
-            )
-            .otherwise(F.lit(OTHER))
-            .alias(d)
-            for d, p in zip(dims, passthrough)
-        ],
-    )
-    value_cols = list(req.base_cols) if req.agg_sql else ["__w"]
+    fold_cols = [
+        f"CASE WHEN __top IS NOT NULL THEN {ident(d) if p else f'CAST({ident(d)} AS STRING)'}"
+        f" ELSE {str_lit(OTHER)} END AS {ident(d)}"
+        for d, p in zip(dims, passthrough)
+    ]
+    value_cols = [ident(c) for c in req.base_cols] if req.agg_sql else ["__w"]
     agg = (
-        folded.select("__bucket", *value_cols, *fold_cols)
+        folded.selectExpr("__bucket", *value_cols, *fold_cols)
         .groupBy("__bucket", *dims)
         .agg(_agg_col(req).alias("sum_w"))
     )

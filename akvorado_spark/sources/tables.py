@@ -54,6 +54,13 @@ _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 def load_table(
     spark: SparkSession, name: str, sf_dir: str | None = None, spread: bool = False
 ) -> DataFrame:
+    """The parquet table ``name`` under ``sf_dir`` as a lazy scan frame.
+
+    The frame is memoized per (session, sf_dir, table, spread) in
+    ``_TABLE_MEMO``, which assumes the ``sf_dir`` parquet files do not
+    change within a session: a file rewritten in place is read through
+    the schema and file listing captured on the first call.  Use a new
+    directory (or a new session) for changed inputs."""
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     # The events table stores TIMESTAMP(NANOS) which Spark's parquet
     # reader rejects by default; read nanos as long and convert.

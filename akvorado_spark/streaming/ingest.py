@@ -36,8 +36,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.sqltext import ident, select_replacing
 from akvorado_spark.operators.classify import ClassifierRule, classify
-from akvorado_spark.operators.lpm import lpm_prepare, lpm_probe  # noqa: F401
 from akvorado_spark.plans.exporters import exporters_frame, latest_exporters
 from akvorado_spark.plans.rollup import FlowStore
 
@@ -388,13 +388,16 @@ def enrich_routing(
             ),
             out_prefix=f"__r{side}_",
         )
+        present = set(df.columns)
+        filled = {}
         for a in side_prep.attrs:
             target = renames[(side, a)]
-            got = F.col(f"__r{side}_{a}")
-            if target in df.columns:
-                # a value the flow already carries wins; routing fills
-                got = F.coalesce(F.col(target), got)
-            df = df.withColumn(target, got).drop(f"__r{side}_{a}")
+            got = ident(f"__r{side}_{a}")
+            # a value the flow already carries wins; routing fills
+            filled[target] = f"coalesce({ident(target)}, {got})" if target in present else got
+        df = select_replacing(
+            df, filled, drop=[f"__r{side}_{a}" for a in side_prep.attrs]
+        )
     return df
 
 
@@ -422,13 +425,15 @@ def enrich(df: DataFrame, cfg: EnrichmentConfig) -> DataFrame:
             cfg.metadata_key, *[F.col(c).alias(f"__m_{c}") for c in meta_cols]
         )
         df = df.join(F.broadcast(renamed), on=cfg.metadata_key, how="left")
-        for c in meta_cols:
-            # metadata fills attributes the flow doesn't carry or left empty
-            if c in df.columns:
-                filled = F.coalesce(F.nullif(F.col(c), F.lit("")), F.col(f"__m_{c}"))
-            else:
-                filled = F.col(f"__m_{c}")
-            df = df.withColumn(c, filled).drop(f"__m_{c}")
+        # metadata fills attributes the flow doesn't carry or left empty
+        present = set(df.columns)
+        filled = {
+            c: f"coalesce(nullif({ident(c)}, ''), {ident('__m_' + c)})"
+            if c in present
+            else ident(f"__m_{c}")
+            for c in meta_cols
+        }
+        df = select_replacing(df, filled, drop=[f"__m_{c}" for c in meta_cols])
     if cfg.classifier_rules:
         df = classify(df, cfg.classifier_rules, cfg.classifier_defaults)
     if cfg.networks is not None and cfg.networks_attrs:
@@ -440,15 +445,18 @@ def enrich(df: DataFrame, cfg: EnrichmentConfig) -> DataFrame:
             if side_addr not in df.columns:
                 continue
             df = lpm_probe(df, prepared_networks, side_addr)
+            present = set(df.columns)
+            filled = {}
             for a in cfg.networks_attrs:
                 target = f"{side}{_NETWORKS_ATTR_COLUMNS.get(a, 'Net' + a.capitalize())}"
-                if target in df.columns:
-                    fallback = F.col(target)
+                if target in present:
+                    fallback = ident(target)
                 elif a == "asn":
-                    fallback = F.lit(None).cast("long")
+                    fallback = "CAST(NULL AS BIGINT)"
                 else:
-                    fallback = F.lit("")
-                df = df.withColumn(target, F.coalesce(F.col(a), fallback)).drop(a)
+                    fallback = "''"
+                filled[target] = f"coalesce({ident(a)}, {fallback})"
+            df = select_replacing(df, filled, drop=cfg.networks_attrs)
     if cfg.routing is not None:
         df = enrich_routing(
             df,
@@ -488,8 +496,9 @@ class FlowIngest:
 
     # -- batch body (also usable standalone for batch replays) -------------
     def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if batch.isEmpty():
-            return
+        # No isEmpty() pre-check: it would run the batch's whole lineage
+        # (e.g. a stateful decode) once more before the write runs it.
+        # An empty batch writes nothing and observes oldest = None.
         from pyspark.sql import Observation
 
         enriched = enrich(batch, self.cfg)

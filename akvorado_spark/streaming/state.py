@@ -36,10 +36,6 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _output_schema(extra: T.StructType) -> T.StructType:
-    return extra
-
-
 def streaming_rate_limit(
     flows: DataFrame,
     limit_per_s: int,

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from akvorado_spark.functions.sqltext import ident
 from akvorado_spark.schema.definition import FlowSchema, flows_schema
 
 # wire columns consumed by the bridge rather than stored directly
@@ -45,44 +46,35 @@ def wire_to_flows(
     rows are never dropped (the reference keeps flows whose metadata
     poll hasn't answered yet)."""
     schema = schema or flows_schema()
-    df = wire.withColumn("TimeReceived", F.timestamp_seconds(F.col("TimeReceived")))
-    df = df.withColumn(
-        "FlowDirection",
-        F.element_at(
-            F.create_map(
-                *[x for k, v in _DIRECTION_LABELS.items() for x in (F.lit(k), F.lit(v))]
-            ),
-            F.coalesce(F.col("FlowDirection"), F.lit(-1)).cast("int"),
-        ),
-    ).withColumn("FlowDirection", F.coalesce("FlowDirection", F.lit("undefined")))
-
+    df = wire
     if interfaces is not None:
         attr_cols = [c for c in interfaces.columns if c not in ("ExporterAddress", "IfIndex")]
-        for side, idx_col in (("InIf", "InIf"), ("OutIf", "OutIf")):
+        for side in ("InIf", "OutIf"):
             sel = interfaces.select(
                 "ExporterAddress",
-                F.col("IfIndex").alias(idx_col),
-                *[F.col(c).alias(f"__{side}_{c}") for c in attr_cols],
+                F.col("IfIndex").alias(side),
+                *[F.col(c).alias(f"{side}{c}") for c in attr_cols],
             )
-            df = df.join(F.broadcast(sel), on=["ExporterAddress", idx_col], how="left")
-            for c in attr_cols:
-                df = df.withColumnRenamed(f"__{side}_{c}", f"{side}{c}")
-    for side in ("InIf", "OutIf"):
-        name = f"{side}Name"
-        fallback = F.col(side).cast("string")
-        if name in df.columns:
-            df = df.withColumn(name, F.coalesce(F.col(name), fallback))
-        else:
-            df = df.withColumn(name, fallback)
+            df = df.join(F.broadcast(sel), on=["ExporterAddress", side], how="left")
 
-    # project onto the stored schema, casting and defaulting
-    out = []
+    # one projection onto the stored schema: typing, the direction
+    # label, the ifindex fallback for unnamed interfaces, defaults
     present = set(df.columns)
+    labels = ", ".join(f"{k}, '{v}'" for k, v in _DIRECTION_LABELS.items())
+    derived = {
+        "TimeReceived": "timestamp_seconds(TimeReceived)",
+        "FlowDirection": f"coalesce(element_at(map({labels}),"
+        " CAST(coalesce(FlowDirection, -1) AS INT)), 'undefined')",
+    }
+    for side in ("InIf", "OutIf"):
+        fallback = f"CAST({side} AS STRING)"
+        name = f"{side}Name"
+        derived[name] = f"coalesce({name}, {fallback})" if name in present else fallback
+        present.add(name)
+    out = []
     for c in schema.stored():
         if c.generated:
             continue  # filled by schema.ingest()
-        if c.name in present:
-            out.append(F.col(c.name).cast(c.dtype).alias(c.name))
-        else:
-            out.append(F.lit(None).cast(c.dtype).alias(c.name))
-    return df.select(*out)
+        value = derived.get(c.name, ident(c.name)) if c.name in present else "NULL"
+        out.append(f"CAST({value} AS {c.dtype.simpleString()}) AS {ident(c.name)}")
+    return df.selectExpr(*out)

@@ -698,3 +698,28 @@ def test_streaming_minhash_bucket_state_is_capped(spark, tmp_path):
     clique = {(1, 2), (1, 3), (2, 3)}
     for a, b in got:
         assert (a, b) in clique or a == 1, (a, b)
+
+
+def test_process_batch_empty_leaves_store_unchanged(spark, tmp_path):
+    """An empty batch needs no isEmpty() pre-check: its write adds no
+    rows, the observed oldest timestamp is None, and the rollups are
+    not rebuilt."""
+    store = FlowStore(spark, str(tmp_path / "store"))
+    ingest = FlowIngest(store)
+    batch = flows_df(spark, n=300)
+    ingest.process_batch(batch)
+
+    def totals():
+        return [
+            store.read(res).agg(F.count(F.lit(1)), F.sum("Bytes"), F.sum("Packets")).first()
+            for res in store.resolutions
+        ]
+
+    before = totals()
+    calls = []
+    orig = store.build_rollups
+    store.build_rollups = lambda since=None: calls.append(since) or orig(since=since)
+    ingest.process_batch(batch.limit(0), batch_id=1)
+    assert calls == []
+    assert totals() == before
+    assert before[0][0] == 300

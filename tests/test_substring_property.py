@@ -104,12 +104,11 @@ def _random_corpus(rng: random.Random, n_docs: int):
     return docs
 
 
-@pytest.mark.slow
-def test_exact_substring_dedup_random_corpora(spark):
+def _exact_substring_dedup_trials(spark, trials: int):
     from akvorado_spark.operators.dedup import exact_substring_dedup
 
     rng = random.Random(1234)
-    for trial in range(4):
+    for trial in range(trials):
         docs = _random_corpus(rng, n_docs=rng.randint(4, 10))
         df = spark.createDataFrame(list(docs.items()), ["doc_id", "text"])
         got = {
@@ -125,6 +124,16 @@ def test_exact_substring_dedup_random_corpora(spark):
         }
         want = _py_substring_dedup(docs)
         assert got == want, f"trial {trial}"
+
+
+@pytest.mark.slow
+def test_exact_substring_dedup_random_corpora(spark):
+    _exact_substring_dedup_trials(spark, 4)
+
+
+def test_exact_substring_dedup_random_corpora_smoke(spark):
+    """One trial of the `slow` sweep in the default profile."""
+    _exact_substring_dedup_trials(spark, 1)
 
 
 def test_winnow_anchors_spark_vs_duckdb_random(spark):
@@ -194,13 +203,12 @@ ORDER BY doc_id, i
         assert sorted(got[i]) == duck[i], (i, t[:40])
 
 
-@pytest.mark.slow
-def test_bpe_random_corpora_match_reference(spark):
+def _bpe_trials(spark, trials: int):
     from akvorado_spark.operators.bpe import train_bpe
     from tests.test_pipeline_ops import _py_bpe
 
     rng = random.Random(77)
-    for trial in range(3):
+    for trial in range(trials):
         vocab = ["ab", "abc", "bca", "aabb", "cab", "bb", "a"]
         rows = []
         words = {}
@@ -212,6 +220,16 @@ def test_bpe_random_corpora_match_reference(spark):
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         n = rng.randint(2, 8)
         assert train_bpe(df, "text", n) == _py_bpe(words, n)[0], f"trial {trial}"
+
+
+@pytest.mark.slow
+def test_bpe_random_corpora_match_reference(spark):
+    _bpe_trials(spark, 3)
+
+
+def test_bpe_random_corpora_match_reference_smoke(spark):
+    """One trial of the `slow` sweep in the default profile."""
+    _bpe_trials(spark, 1)
 
 
 def _py_line_dedup(docs: dict[int, str], min_docs: int, min_len: int, keep_owner: bool):
@@ -238,8 +256,7 @@ def _py_line_dedup(docs: dict[int, str], min_docs: int, min_len: int, keep_owner
     return out
 
 
-@pytest.mark.slow
-def test_line_dedup_random_corpora(spark):
+def _line_dedup_trials(spark, trials: int):
     from akvorado_spark.operators.dedup import line_dedup
 
     rng = random.Random(4242)
@@ -251,7 +268,7 @@ def test_line_dedup_random_corpora(spark):
         "some unique-ish filler {}",
         "another body line {}",
     ]
-    for trial in range(3):
+    for trial in range(trials):
         docs = {}
         for d in range(rng.randint(3, 8)):
             n = rng.randint(1, 8)
@@ -274,7 +291,16 @@ def test_line_dedup_random_corpora(spark):
 
 
 @pytest.mark.slow
-def test_bigram_lm_random_corpora_match_python(spark):
+def test_line_dedup_random_corpora(spark):
+    _line_dedup_trials(spark, 3)
+
+
+def test_line_dedup_random_corpora_smoke(spark):
+    """One trial of the `slow` sweep in the default profile."""
+    _line_dedup_trials(spark, 1)
+
+
+def _bigram_lm_trials(spark, trials: int):
     """Randomized corpora through the distributed LM: per-doc micro-nat
     scores equal a plain-python reference bit-for-bit (add-one
     smoothing, self-trained)."""
@@ -284,7 +310,7 @@ def test_bigram_lm_random_corpora_match_python(spark):
 
     rng = random.Random(909)
     vocab = ["alpha", "beta", "gamma", "delta", "x1", "Y2", "z...", ""]
-    for trial in range(3):
+    for trial in range(trials):
         rows = []
         for d in range(rng.randint(3, 7)):
             rows.append(
@@ -315,3 +341,13 @@ def test_bigram_lm_random_corpora_match_python(spark):
                 for bg in bgs
             )
             assert got[d] == (len(bgs), lp), (trial, d)
+
+
+@pytest.mark.slow
+def test_bigram_lm_random_corpora_match_python(spark):
+    _bigram_lm_trials(spark, 3)
+
+
+def test_bigram_lm_random_corpora_match_python_smoke(spark):
+    """One trial of the `slow` sweep in the default profile."""
+    _bigram_lm_trials(spark, 1)
